@@ -2,6 +2,8 @@ package graft.etl
 
 import java.nio.file.{Files, Path}
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,12 +31,15 @@ class Pipeline(spark: SparkSession, stagingPath: String, dwPath: String,
     * (the reference only logs it; 02_load_stage_pedidos.py:212-233). */
   case class LoadResult(file: String, status: String, reason: String, rows: Long)
 
-  /** Stage 2 (02_load_stage_pedidos.py processar :200-233): per new file —
-    * robust read → gate → map → append to staging; route the file to
-    * lidos/ (ok) or erros/ (empty/bad header/zero rows/any failure).
-    * Returns (loaded, quarantined); a lock-busy no-op counts in NEITHER
-    * (it is not a file outcome — check [[loadStageReport]] for the
-    * `lock_busy` row when (0, 0) needs disambiguating). */
+  /** Stage 2 (02_load_stage_pedidos.py processar :200-233), batched: every
+    * new file's head is probed (dialect + header gate, no Spark job), the
+    * passing files are read with one scan per (dialect, header) group,
+    * one aggregate counts the rows per file, one append writes them all, and
+    * then each file is routed to lidos/ (ok) or erros/ (empty/bad header/
+    * zero rows/probe failure). Returns (loaded, quarantined); a
+    * lock-busy no-op counts in NEITHER (it is not a file outcome — check
+    * [[loadStageReport]] for the `lock_busy` row when (0, 0) needs
+    * disambiguating). */
   def loadStage(novos: Path, lidos: Path, erros: Path): (Int, Int) = {
     val report = loadStageReport(novos, lidos, erros)
     (report.count(_.status == "loaded"), report.count(_.status == "quarantined"))
@@ -42,7 +47,15 @@ class Pipeline(spark: SparkSession, stagingPath: String, dwPath: String,
 
   /** Like [[loadStage]] but returns the per-file audit trail. Runs under
     * the staging run lock: a concurrent runner gets a single `lock_busy`
-    * row back (no files touched) instead of double-appending. */
+    * row back (no files touched) instead of double-appending.
+    *
+    * Failure model: a file whose probe fails is quarantined with a
+    * `failure: …` reason. A failure inside the shared Spark jobs (count or
+    * append) belongs to no one file: it throws with nothing appended and no
+    * file routed, so the next run retries the whole batch.
+    * A crash between the append and the routing leaves the whole batch
+    * appended but unrouted, so the next run appends it again (the crash
+    * window that crash-consistent table generations are to close). */
   def loadStageReport(novos: Path, lidos: Path, erros: Path): Seq[LoadResult] =
     RunLock.tryWithLock(runLockFile, lockWaitMs) {
       loadStageReportUnlocked(novos, lidos, erros)
@@ -50,31 +63,29 @@ class Pipeline(spark: SparkSession, stagingPath: String, dwPath: String,
       "another runner holds the staging run lock", 0)))
 
   private def loadStageReportUnlocked(
-      novos: Path, lidos: Path, erros: Path): Seq[LoadResult] =
-    StageLoad.listarCsvNovos(novos, lidos, erros).map { file =>
+      novos: Path, lidos: Path, erros: Path): Seq[LoadResult] = {
+    val probes = StageLoad.listarCsvNovos(novos, lidos, erros)
+      .map(file => file -> Try(StageLoad.probe(file)))
+    val batch = StageLoad.loadFiles(spark, probes.collect {
+      case (file, Success(p)) if StageLoad.headerValido(p.header) => file -> p
+    })
+    val rows = batch.fold(Map.empty[String, Long])(
+      _.groupBy("arquivo_origem").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap)
+    if (rows.nonEmpty) batch.get.write.mode("append").parquet(stagingPath)
+    probes.map { case (file, probe) =>
       val name = file.getFileName.toString
-      try {
-        StageLoad.loadFile(spark, file) match {
-          case Some(df) =>
-            val n = df.count()
-            if (n > 0) {
-              df.write.mode("append").parquet(stagingPath)
-              StageLoad.safeCopy(file, lidos)
-              LoadResult(name, "loaded", "", n)
-            } else {
-              StageLoad.safeCopy(file, erros)
-              LoadResult(name, "quarantined", "zero rows", 0)
-            }
-          case None =>
-            StageLoad.safeCopy(file, erros)
-            LoadResult(name, "quarantined", "empty or unrecognized header", 0)
-        }
-      } catch {
-        case e: Exception =>
-          StageLoad.safeCopy(file, erros)
-          LoadResult(name, "quarantined", s"failure: ${e.getMessage}", 0)
+      val result = probe match {
+        case Failure(e) => LoadResult(name, "quarantined", s"failure: ${e.getMessage}", 0)
+        case Success(p) if !StageLoad.headerValido(p.header) =>
+          LoadResult(name, "quarantined", "empty or unrecognized header", 0)
+        case _ => rows.get(name).fold(LoadResult(name, "quarantined", "zero rows", 0))(
+          n => LoadResult(name, "loaded", "", n))
       }
+      StageLoad.safeCopy(file, if (result.status == "loaded") lidos else erros)
+      result
     }
+  }
 
   /** Stage 3 (03_upsert_dw_pedidos.py run_upsert): staging → typed
     * projection → latest-per-key dedup → conditional merge into DW →
@@ -89,12 +100,8 @@ class Pipeline(spark: SparkSession, stagingPath: String, dwPath: String,
     * (~120 for a decade) and each partition large enough for healthy file
     * sizes. Rows with NULL data_nfe land in the Hive default partition and
     * survive the round-trip. */
-  def upsertDw(): Unit = {
-    val updates = Dedup.latestPedido(Typed.project(readStaging()))
-    val dw = readDw()
-    val merged = Merge.mergePedidos(dw, updates)
-    Pipeline.writeDw(merged, dwPath)
-  }
+  def upsertDw(): Unit =
+    Pipeline.mergeIntoDw(spark, Typed.project(readStaging()), dwPath)
 
   /** Staging snapshot; empty DataFrame before the first successful load
     * (nothing staged ≠ a failure). */
@@ -114,20 +121,6 @@ class Pipeline(spark: SparkSession, stagingPath: String, dwPath: String,
     RunLock.tryWithLock(runLockFile, lockWaitMs) {
       Archive.run(spark, stagingPath, histPath)
     }.getOrElse(Archive.Audit(0, "", lockBusy = true))
-
-  /** Staging small-files maintenance: [[loadStage]] appends one parquet
-    * file set per loaded CSV, so staging accumulates a file per source
-    * file between archives — this rewrites it into healthy-sized files
-    * under the SAME run lock the load/archive stages use (a compactor
-    * racing a loader would lose the loader's concurrent append in the
-    * swap). Scheduled alongside the reference's cron cadence; a lock-busy
-    * invocation no-ops with `skipped = true` rather than blocking the
-    * pipeline. */
-  def compactStaging(targetBytes: Long = Compactor.defaultTargetBytes)
-      : Compactor.Audit =
-    RunLock.tryWithLock(runLockFile, lockWaitMs) {
-      Compactor.compact(spark, stagingPath, targetBytes)
-    }.getOrElse(Compactor.Audit(0, 0L, 0, 0L, skipped = true))
 
   /** Logical fat-table view: fatSchema columns only (the derived partition
     * column is storage layout, not data — dropped on read so merge inputs
@@ -157,9 +150,6 @@ class Pipeline(spark: SparkSession, stagingPath: String, dwPath: String,
       raw.filter(col(Pipeline.dwPartitionCol) === month)
         .drop(Pipeline.dwPartitionCol)
   }
-
-  private def atomicOverwrite(df: DataFrame, path: String): Unit =
-    Pipeline.atomicOverwrite(df, path)
 }
 
 object Pipeline {
@@ -178,6 +168,15 @@ object Pipeline {
     atomicOverwrite(
       df.withColumn(dwPartitionCol, date_format(col("data_nfe"), "yyyy-MM")),
       path, partitionCols = Seq(dwPartitionCol))
+
+  /** Latest-per-key dedup of `typed` (typed staging rows), conditional
+    * merge into the DW at `path`, partitioned write-back — the one upsert
+    * shared by [[Pipeline.upsertDw]] and the streaming twin's micro-batches.
+    * The merge reads the DW it replaces with no materialization: [[writeDw]]
+    * writes a fresh `.tmp_` generation and swaps it in only after the write
+    * has finished, so the input is never overwritten while it is read. */
+  def mergeIntoDw(spark: SparkSession, typed: DataFrame, path: String): Unit =
+    writeDw(Merge.mergePedidos(readDw(spark, path), Dedup.latestPedido(typed)), path)
 
   /** True when `path` holds data files at the top level with no
     * `nfe_month=` partition directories — the pre-partitioning layout.

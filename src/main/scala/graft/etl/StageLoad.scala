@@ -5,8 +5,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Robust CSV → staging load: dialect sniffing, header validation, header
   * mapping, fixed-order projection, lineage column.
@@ -20,9 +21,11 @@ import org.apache.spark.sql.functions._
   *    the fixed column order (:169-177)
   *  - per-row lineage column arquivo_origem = basename (:184)
   *
-  * Division of labor (SURVEY §2 O-4): dialect detection is a driver-side
-  * probe of the file head — Spark's CSV reader takes encoding/sep as fixed
-  * options and does not sniff — while parsing/projection run distributed.
+  * Division of labor (SURVEY §2 O-4): dialect detection and the header
+  * gate are a probe of each file's head, outside Spark — Spark's CSV reader
+  * takes encoding/sep as fixed options and does not sniff — while parsing
+  * and projection run distributed, in one multi-path scan per (dialect,
+  * header) group of files rather than one scan per file.
   */
 object StageLoad {
 
@@ -57,8 +60,14 @@ object StageLoad {
     dec.decode(java.nio.ByteBuffer.wrap(bytes)).toString
   }.toOption
 
-  /** Driver-side dialect sniff of one file's head. */
-  def sniffDialect(path: Path): Dialect = {
+  /** What a read of one file's head tells, with no Spark job: the
+    * sniffed dialect and the header cells — the first non-blank line (the
+    * line Spark's CSV reader drops as the header) split with the sniffed
+    * separator; empty when the file has no such line. */
+  case class Probe(dialect: Dialect, header: Seq[String])
+
+  /** Probe of one file's head: dialect sniff and header. */
+  def probe(path: Path): Probe = {
     val head = {
       val in = Files.newInputStream(path)
       val raw = try in.readNBytes(1 << 20) finally in.close() // 1 MiB ≫ 201 lines
@@ -78,7 +87,10 @@ object StageLoad {
       .flatMap(e => tryDecode(head, e).map(e -> _))
       .nextOption()
       .getOrElse("ISO-8859-1" -> new String(head, "ISO-8859-1")) // never fails
-    Dialect(enc, detectSep(text.linesIterator.take(sniffWindow).toSeq))
+    val dialect = Dialect(enc, detectSep(text.linesIterator.take(sniffWindow).toSeq))
+    val header = text.linesIterator.find(_.trim.nonEmpty).toSeq
+      .flatMap(splitCsvLine(_, dialect.sep.head))
+    Probe(dialect, header)
   }
 
   /** Normalize one header cell: trim + BOM strip (ref :145). */
@@ -91,79 +103,50 @@ object StageLoad {
   /** Spark 4 restricts CSV charsets to this native set unless
     * `spark.sql.legacy.javaCharsets` is on (SPARK-46841). The sniffer's
     * candidate list includes windows-1252 — the reference's PRIMARY
-    * encoding for these reports — so the readers below enable the conf on
-    * demand; without it every cp1252 file throws at analysis and the
-    * quarantine router silently eats the load. */
+    * encoding for these reports — so the reader below enables the conf on
+    * demand; without it every cp1252 file throws at analysis. */
   private val nativeCsvCharsets = Set(
     "iso-8859-1", "us-ascii", "utf-16", "utf-16be", "utf-16le", "utf-32", "utf-8")
   private def ensureCharsetReadable(spark: SparkSession, encoding: String): Unit =
     if (!nativeCsvCharsets(encoding.toLowerCase(java.util.Locale.ROOT)))
       spark.conf.set("spark.sql.legacy.javaCharsets", "true")
 
-  /** Read one CSV with sniffed dialect into an all-string DataFrame.
-    * PERMISSIVE mode: ragged short rows → null-padded; Spark's univocity
-    * parser handles quotes/escapes like the reference's csv.reader
-    * (quotechar '"', doublequote, escapechar '\\'; ref :133-136). */
-  def readCsv(spark: SparkSession, path: String, dialect: Dialect): DataFrame = {
-    ensureCharsetReadable(spark, dialect.encoding)
-    spark.read
+  /** Read the files that share one probe (dialect and header) with ONE
+    * multi-path scan over an all-string schema with one field per header
+    * cell: Spark drops each file's first non-blank line (the header
+    * [[probe]] already parsed) and skips blank lines. PERMISSIVE mode: a short
+    * row is null-padded and a row longer than the header loses its overflow
+    * cells. Spark's univocity parser handles quotes/escapes like the
+    * reference's csv.reader (quotechar '"', doublequote, escapechar '\\';
+    * ref :133-136). Then blank-filter → map → lineage from the file each
+    * row came from. */
+  private def readGroup(spark: SparkSession, files: Seq[Path], probe: Probe): DataFrame = {
+    ensureCharsetReadable(spark, probe.dialect.encoding)
+    // the fields are named by the header's own cells where Spark accepts
+    // them (non-empty, distinct ignoring case), so its header-conformance
+    // check does not warn for every file; positional names otherwise
+    val h = probe.header
+    val fields =
+      if (h.forall(c => c.nonEmpty && !c.contains('`')) &&
+          h.map(_.toLowerCase(java.util.Locale.ROOT)).distinct.size == h.size) h
+      else h.indices.map(i => s"_c$i")
+    val raw = spark.read
+      .schema(StructType(fields.map(StructField(_, StringType))))
       .option("header", true)
-      .option("sep", dialect.sep)
-      .option("encoding", dialect.encoding)
+      .option("sep", probe.dialect.sep)
+      .option("encoding", probe.dialect.encoding)
       .option("quote", "\"")
       .option("escape", "\\")
       .option("mode", "PERMISSIVE")
-      .option("inferSchema", false)
-      .csv(path)
-  }
-
-  /** Exact ragged-row parity path (ref :150-156): a row longer than the
-    * header has its overflow cells re-joined with the separator into the
-    * last column; a shorter row is padded with "". Spark CSV PERMISSIVE
-    * cannot express the re-join, so this path reads lines as text and
-    * applies a small CSV splitter per partition (no driver materialization).
-    * Caveat: line-based, so quoted fields spanning physical lines are not
-    * supported on this path (use readCsv for those files). */
-  def readCsvRaggedParity(spark: SparkSession, path: String, dialect: Dialect): DataFrame = {
-    import spark.implicits._
-    val sep = dialect.sep.head
-    ensureCharsetReadable(spark, dialect.encoding)
-    // whole physical lines through the CSV source, NOT the text source: the
-    // text source has no encoding option (it silently reads UTF-8, which
-    // would mojibake every cp1252 file on this path). A never-occurring
-    // separator keeps each line one cell; quoting is disabled so the
-    // splitter below (which implements the reference's quote semantics)
-    // sees the raw line.
-    val lines = spark.read
-      .option("header", false)
-      .option("sep", "\u0001") // a control char no textual CSV export contains
-      .option("quote", "")
-      .option("encoding", dialect.encoding)
-      .option("mode", "PERMISSIVE")
-      .csv(path)
-      .select(col("_c0").cast("string"))
-      .as[String]
-      .filter((l: String) => l != null && l.trim.nonEmpty)
-    val headerLine = lines.head() // one tiny action on the head partition
-    val header = splitCsvLine(headerLine, sep).map(normHeader)
-    val n = header.length
-    // Skip only the FIRST physical line (the header), not every line equal
-    // to it: a data row byte-identical to the header must survive, as in the
-    // reference (which skips exactly row 0). zipWithIndex is deterministic
-    // over the file source's partition order.
-    val rows = lines.rdd.zipWithIndex()
-      .filter(_._2 > 0L).map(_._1)
-      .map { l =>
-        val cells = splitCsvLine(l, sep)
-        val fixed =
-          if (cells.length > n) cells.take(n - 1) :+ cells.drop(n - 1).mkString(sep.toString)
-          else if (cells.length < n) cells ++ Seq.fill(n - cells.length)("")
-          else cells
-        fixed
-      }
-    rows.toDF("cells")
-      .select((0 until n).map(i => col("cells").getItem(i).as(header(i))): _*)
-      .filter(concat_ws("", header.map(h => trim(col(s"`$h`"))): _*) =!= "")
+      // a path string is a glob pattern: escape its metacharacters so a
+      // file named like `a[1].csv` reads as itself
+      .csv(files.map(_.toString.replaceAll("""([\\{}\[\]*?])""", """\\$1""")): _*)
+    // _metadata.file_name is the URI-encoded basename (a space reads back
+    // as %20, a % as %25); '+' is literal in a URI path, so it is escaped
+    // before url_decode, which would otherwise read it as a space
+    val origem = url_decode(regexp_replace(col("_metadata.file_name"), "\\+", "%2B"))
+    dropBlankRows(raw).select(
+      mapeadas(raw.columns.toSeq, probe.header) :+ origem.as("arquivo_origem"): _*)
   }
 
   /** Minimal CSV field splitter with the reference dialect: quotechar '"',
@@ -192,26 +175,21 @@ object StageLoad {
   /** Rename via DE_PARA, fill missing canonical columns with "", project to
     * the fixed 40-column order (lineage excluded; ref :169-177). A file
     * carrying two accepted spelling variants of the same header (DE_PARA
-    * maps three spellings to data_prev_entrega_original) keeps the FIRST
-    * occurrence — the reference's pandas path would produce a duplicate
-    * label and fail the COPY, quarantining a loadable file. */
-  def aplicarMapeamento(df: DataFrame): DataFrame = {
-    val seen = scala.collection.mutable.Set.empty[String]
-    val projected = df.columns.zipWithIndex.flatMap { case (c, i) =>
-      Schemas.dePara.get(normHeader(c)) match {
-        case Some(canon) if !seen(canon) =>
-          seen += canon
-          Some(df.columns(i) -> canon)
-        case _ => None // unknown header or later duplicate variant: dropped
-      }
-    }.toMap
-    val renamed = df.select(df.columns.zipWithIndex.collect {
-      case (c, i) if projected.contains(c) => col(s"`$c`").as(projected(c))
-    }.toIndexedSeq: _*)
-    val have = renamed.columns.toSet
-    val target = Schemas.colunasDestino.filterNot(_ == "arquivo_origem")
-    renamed.select(target.map(c =>
-      if (have(c)) col(c) else lit("").as(c)): _*)
+    * maps three spellings to data_prev_entrega_original), or one header
+    * twice, keeps the FIRST occurrence — the reference's pandas path would
+    * produce a duplicate label and fail the COPY, quarantining a loadable
+    * file. */
+  def aplicarMapeamento(df: DataFrame): DataFrame =
+    df.select(mapeadas(df.columns.toSeq, df.columns.toSeq): _*)
+
+  /** The mapped staging columns over `columns`, whose i-th entry carries
+    * the file's i-th `header` cell. */
+  private def mapeadas(columns: Seq[String], header: Seq[String]): Seq[Column] = {
+    val first = header.zipWithIndex.reverse.flatMap { case (h, i) =>
+      Schemas.dePara.get(normHeader(h)).map(_ -> columns(i))
+    }.toMap // reversed, so the first occurrence of a canonical name wins
+    Schemas.colunasDestino.filterNot(_ == "arquivo_origem").map(c =>
+      first.get(c).fold(lit("").as(c))(src => col(s"`$src`").as(c)))
   }
 
   /** Blank-row filter (ref :141): drop rows where every cell is whitespace
@@ -220,19 +198,19 @@ object StageLoad {
     df.filter(
       df.columns.map(c => trim(coalesce(col(s"`$c`"), lit(""))) =!= "").reduce(_ || _))
 
-  /** Full single-file load: sniff → read → blank-filter → gate → map →
-    * lineage. Returns None when the file fails the header gate (caller
-    * quarantines, ref :212-216). */
-  def loadFile(spark: SparkSession, file: Path,
-      raggedParity: Boolean = false): Option[DataFrame] = {
-    val dialect = sniffDialect(file)
-    val raw =
-      if (raggedParity) readCsvRaggedParity(spark, file.toString, dialect)
-      else readCsv(spark, file.toString, dialect)
-    if (!headerValido(raw.columns.toSeq)) None
-    else Some(
-      aplicarMapeamento(dropBlankRows(raw))
-        .withColumn("arquivo_origem", lit(file.getFileName.toString)))
+  /** Batch load: the files that passed the header gate, read with one scan
+    * per (dialect, header) group and unioned into one staging-shaped frame
+    * with per-row lineage; None when there are no files. */
+  def loadFiles(spark: SparkSession, files: Seq[(Path, Probe)]): Option[DataFrame] =
+    files.groupBy(_._2).toSeq.sortBy(_._2.head._1.toString)
+      .map { case (p, group) => readGroup(spark, group.map(_._1), p) }
+      .reduceOption(_ unionByName _)
+
+  /** Single-file load: probe → gate → [[loadFiles]]. Returns None when the
+    * file fails the header gate (caller quarantines, ref :212-216). */
+  def loadFile(spark: SparkSession, file: Path): Option[DataFrame] = {
+    val p = probe(file)
+    if (!headerValido(p.header)) None else loadFiles(spark, Seq(file -> p))
   }
 
   /** File-queue discovery (ref :107-113): candidates in `novos` whose

@@ -1,5 +1,9 @@
 package graft.etl
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,6 +49,25 @@ object ZOrderWriter {
   case object Linear extends Layout
 
   private val manifestDir = "_graft_manifest"
+
+  /** 128 MiB — the classic healthy-parquet-file size (one HDFS block /
+    * one comfortable scan task); the default target of [[compact]]. */
+  val defaultTargetBytes: Long = 128L * 1024 * 1024
+
+  /** The parquet data files under `path`, skipping the Spark hidden-path
+    * convention: a _- or .-prefixed COMPONENT anywhere under the root (the
+    * `_graft_manifest` directory among them) is metadata, not data. */
+  private[graft] def dataFiles(path: Path): Seq[Path] = {
+    if (!Files.exists(path)) return Nil
+    val s = Files.walk(path)
+    try s.iterator().asScala.filter(p => Files.isRegularFile(p) &&
+      p.getFileName.toString.endsWith(".parquet") &&
+      path.relativize(p).iterator().asScala.forall { c =>
+        val cn = c.toString
+        !cn.startsWith("_") && !cn.startsWith(".")
+      }).toSeq
+    finally s.close()
+  }
 
   /** 16-bit Morton interleave of two 8-bit lanes (the zorder_pack
     * expression — one copy): d1 bits land at odd positions, d2 at even. */
@@ -116,17 +139,18 @@ object ZOrderWriter {
 
   /** Layout-preserving compaction of a [[write]]-produced directory:
     * re-sorts on the same dimensions into ⌈bytes/targetBytes⌉ files and
-    * regenerates the manifest, swapped in atomically — the
-    * [[graft.etl.Compactor]] maintenance job for z-ordered tables, where
-    * a plain row-shuffling rewrite would destroy the min/max envelopes
-    * pruning depends on. Returns (filesBefore, filesAfter). */
+    * regenerates the manifest, swapped in atomically — small-files
+    * maintenance for z-ordered tables, where a plain row-shuffling rewrite
+    * would destroy the min/max envelopes pruning depends on. No-ops when
+    * the directory already has ≤ that many files. Returns (filesBefore,
+    * filesAfter). */
   def compact(spark: SparkSession, path: String, d1: Column, d2: Column,
-      targetBytes: Long = Compactor.defaultTargetBytes,
+      targetBytes: Long = defaultTargetBytes,
       layout: Layout = ZOrder): (Int, Int) = {
-    val p = java.nio.file.Paths.get(path)
-    val files = Compactor.dataFiles(p)
+    val p = Paths.get(path)
+    val files = dataFiles(p)
     if (files.isEmpty) return (0, 0)
-    val bytes = files.map(java.nio.file.Files.size).sum
+    val bytes = files.map(Files.size).sum
     val want = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     if (files.size <= want) return (files.size, files.size)
     // the rewrite (and its manifest pass) lands entirely in tmp BEFORE the
@@ -135,7 +159,7 @@ object ZOrderWriter {
     val tmp = path + ".compact_" + System.nanoTime()
     write(spark.read.parquet(path), tmp, d1, d2, want, layout)
     Pipeline.swapInto(tmp, path)
-    (files.size, Compactor.dataFiles(p).size)
+    (files.size, dataFiles(p).size)
   }
 
   /** Read only the probe-relevant files. Callers still apply their exact

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.etl.{Dedup, Merge, Schemas, Typed}
+import graft.etl.{Schemas, Typed}
 
 /** Structured Streaming surface of the engine.
   *
@@ -45,15 +45,9 @@ object StreamingPipeline {
       .outputMode(OutputMode.Update)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val updates = Dedup.latestPedido(batch)
-        // same partitioned read/write as the batch upsert: a DW directory
-        // is interchangeable between the batch and streaming twins
-        val dw = graft.etl.Pipeline.readDw(spark, dwPath)
-        val merged = Merge.mergePedidos(dw, updates).cache()
-        merged.count() // materialize before overwriting the input path
-        graft.etl.Pipeline.writeDw(merged, dwPath)
-        merged.unpersist()
-        ()
+        // the batch upsert itself: a DW directory is interchangeable
+        // between the batch and streaming twins
+        graft.etl.Pipeline.mergeIntoDw(spark, batch, dwPath)
       }
       .trigger(Trigger.AvailableNow())
       .start()

@@ -69,11 +69,6 @@ object PipelineDemo {
       s"SELECT COUNT(*) AS n FROM ${GraftCatalog.dwTable}").collect()(0).getLong(0)
     println(s"[catalog] spark.table(${GraftCatalog.dwTable}) rows=$viaCatalog")
 
-    // staging small-files maintenance (one parquet file set per loaded CSV)
-    val comp = pipeline.compactStaging()
-    println(s"[compact] files=${comp.filesBefore}->${comp.filesAfter} " +
-      s"skipped=${comp.skipped}")
-
     val audit = pipeline.archive()
     println(s"[archive] moved=${audit.moved} batch_id=${audit.batchId}")
     // archive() creates the hist dir even when it moves 0 rows (an

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import java.nio.file.{Files, Path}
 import java.nio.charset.Charset
 
-/** Dialect sniffing, ragged-row parity, header gate, mapping — fixture
+/** Dialect sniffing, ragged rows, header gate, mapping — fixture
   * shapes from FIXTURES.md §A.1 / reference 02_load_stage_pedidos.py. */
 class StageLoadSpec extends SparkSpec {
 
@@ -27,33 +27,31 @@ class StageLoadSpec extends SparkSpec {
 
   test("sniffDialect: cp1252 vs utf-8 with accented headers") {
     val cp = tmpFile("cp.csv", "Nome Destinatário;Endereço\nJosé;Rua São João\n", "windows-1252")
-    val d1 = StageLoad.sniffDialect(cp)
+    val d1 = StageLoad.probe(cp).dialect
     assert(d1.sep == ";")
     assert(d1.encoding == "windows-1252") // 0xE9 'é' is invalid UTF-8
+    assert(StageLoad.probe(cp).header == Seq("Nome Destinatário", "Endereço"))
     val utf = tmpFile("utf.csv", "Nome Destinatário,Endereço\nJosé,Rua\n", "UTF-8")
-    val d2 = StageLoad.sniffDialect(utf)
+    val d2 = StageLoad.probe(utf).dialect
     assert(d2.sep == ",")
     assert(d2.encoding == "UTF-8")
   }
 
-  test("cp1252 file loads end-to-end on BOTH read paths (SPARK-46841 charset gate)") {
+  test("cp1252 file loads end-to-end (SPARK-46841 charset gate)") {
     // Spark 4 rejects windows-1252 at CSV analysis unless
     // spark.sql.legacy.javaCharsets is on — without ensureCharsetReadable
     // every cp1252 report (the reference's primary encoding) would throw
-    // and be silently quarantined by the router.
+    // and fail the whole batch load.
     val csv = header10 + "\nJosé;P1;" + ("1" * 44) +
       ";10,5;1,250;SP;31/12/2024;31/12/2024 10:00:00;2;São Paulo\n"
-    for (ragged <- Seq(false, true)) {
-      val p = tmpFile(s"cp1252_$ragged.csv", csv, "windows-1252")
-      val d = StageLoad.sniffDialect(p)
-      assert(d.encoding == "windows-1252")
-      val df = StageLoad.loadFile(spark, p, raggedParity = ragged)
-        .getOrElse(fail(s"cp1252 file failed the header gate (ragged=$ragged)"))
-      val r = df.collect().head
-      // accented DATA cells decode correctly too (not just the header)
-      assert(r.getAs[String]("id") == "José", s"ragged=$ragged")
-      assert(r.getAs[String]("cd") == "São Paulo", s"ragged=$ragged")
-    }
+    val p = tmpFile("cp1252.csv", csv, "windows-1252")
+    assert(StageLoad.probe(p).dialect.encoding == "windows-1252")
+    val df = StageLoad.loadFile(spark, p)
+      .getOrElse(fail("cp1252 file failed the header gate"))
+    val r = df.collect().head
+    // accented DATA cells decode correctly too (not just the header)
+    assert(r.getAs[String]("id") == "José")
+    assert(r.getAs[String]("cd") == "São Paulo")
   }
 
   test("headerValido: ≥10 known headers accepts; fewer rejects (ref :163-167)") {
@@ -66,16 +64,18 @@ class StageLoadSpec extends SparkSpec {
     assert(StageLoad.headerValido(("﻿ID" +: header10.split(";").toSeq.drop(1))))
   }
 
-  test("ragged parity: overflow cells rejoin into last column; short rows pad (ref :150-156)") {
+  test("ragged rows: overflow cells are dropped; short rows pad with NULL") {
     val csv = header10 + "\n" +
       "1;P1;k;10,5;1;SP;31/12/2024;31/12/2024 10:00:00;2;CD1;EXTRA1;EXTRA2\n" + // 12 cells > 10
       "2;P2;k2;3,4\n" // 4 cells < 10
     val p = tmpFile("ragged.csv", csv)
-    val df = StageLoad.readCsvRaggedParity(spark, p.toString, StageLoad.Dialect("UTF-8", ";"))
-    val rows = df.orderBy("ID").collect()
+    val df = StageLoad.loadFile(spark, p).getOrElse(fail("header gate failed"))
+    val rows = df.orderBy("id").collect()
     assert(rows.length == 2)
-    assert(rows(0).getAs[String]("CD") == "CD1;EXTRA1;EXTRA2") // rejoined with sep
-    assert(rows(1).getAs[String]("CD") == "") // padded
+    assert(rows(0).getAs[String]("cd") == "CD1") // the overflow cells are gone
+    assert(!rows(0).toSeq.exists(v => v != null && v.toString.contains("EXTRA")))
+    assert(rows(1).getAs[String]("valor_nfe") == "3,4")
+    assert(rows(1).getAs[String]("cd") == null) // padded
   }
 
   test("splitCsvLine honors quotes, doublequote, escapechar (ref :133-136)") {

@@ -18,11 +18,11 @@ for seed in ${seeds[@]}; do
   python3 tools/fuzz_gen.py "$dir" "$seed"
   sbt -batch "runMain graft.Verify $dir $out" >/dev/null 2>&1 || {
     echo "fuzz_gate: Verify crashed on seed $seed" >&2; rc=1; continue; }
-  if python3 tools/verify_local.py "$dir" "$out" | tail -1 | grep -q " 0 failed"; then
+  if python3 tools/verify_driver_mirror.py "$dir" "$out" | tail -1 | grep -q " 0 failed"; then
     echo "fuzz_gate: seed $seed GREEN"
   else
     echo "fuzz_gate: seed $seed FAILED:" >&2
-    python3 tools/verify_local.py "$dir" "$out" | grep ^FAIL >&2 || true
+    python3 tools/verify_driver_mirror.py "$dir" "$out" | grep ^FAIL >&2 || true
     rc=1
   fi
 done

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Differential-fuzz corpus generator: a seeded, DIRTY random corpus in the
 driver's exact parquet schemas (incl. timestamp[ns] events and timestamp[ms]
-orders/lineitem), so the full Verify + verify_local gate can run on inputs
+orders/lineitem), so the full Verify + verify_driver_mirror gate can run on inputs
 the fixed testdata never shows it — NULL keys, unicode, negatives, duplicate
 ids, empty/whitespace texts, empty vectors, malformed JSON.
 
@@ -16,7 +16,7 @@ Usage:
 then:
 
     sbt "runMain graft.Verify <outDir> /tmp/fuzz_out"
-    tools/verify_local.py <outDir> /tmp/fuzz_out
+    tools/verify_driver_mirror.py <outDir> /tmp/fuzz_out
 
 Any FAIL is a real latent cross-engine divergence (the class every ADVICE
 finding so far has belonged to), not box noise: both engines read the same
